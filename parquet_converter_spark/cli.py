@@ -317,6 +317,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "report":
         from . import checkpoint as ckpt
         from .maintenance import reclaimable_bytes, vacuum_remnants
+        from .localframe import empty_df
+        from .schema import METRICS_SCHEMA
         from pyspark.sql import functions as F
 
         io = _io(spark, args.out)
@@ -333,9 +335,16 @@ def main(argv: list[str] | None = None) -> int:
             .collect()[0]
         )
         retired = manifest.where(F.col("status") == "retired").count()
+        # pinned schema: no inference job, and one shape across files
+        # written by any engine version. A table whose commits were all
+        # errors or no-op reruns has no metrics files at all.
+        metrics = (
+            io.read(ckpt.METRICS, METRICS_SCHEMA)
+            if io.exists(ckpt.METRICS)
+            else empty_df(spark, METRICS_SCHEMA)
+        )
         by_codec = (
-            io.read(ckpt.METRICS)
-            .join(ckpt.visible_triples(io), ["bucket", "salt", "run_id"], "left_semi")
+            metrics.join(ckpt.visible_triples(io), ["bucket", "salt", "run_id"], "left_semi")
             .groupBy("column", "codec")
             .agg(F.sum("encoded_bytes").alias("bytes"), F.count("*").alias("groups"))
             .orderBy("column", "codec")

@@ -29,10 +29,21 @@ from .partitioning import (
     resolve_time_bucket,
     with_group_keys,
 )
-from .schema import BLOCKS_STORED_SCHEMA, COLUMN_DTYPES, ENCODED_COLUMNS
+from .localframe import local_df
+from .schema import (
+    BLOCKS_STORED_SCHEMA,
+    COLUMN_DTYPES,
+    ENCODED_COLUMNS,
+    MANIFEST_SCHEMA,
+    METRICS_SCHEMA,
+    TABLE_META_SCHEMA,
+)
 
 #: rows per encoded chunk — bounds Arrow batch and block sizes
 DEFAULT_CHUNK_ROWS = 65_536
+
+#: the chunk-row columns the commit reads back (binary blocks pruned)
+_COMMIT_COLS = ["bucket", "salt", "chunk", "n_rows", "blk_bytes", "meta"]
 
 
 def _codec_for(codec, col: str):
@@ -198,6 +209,55 @@ def _encode_group_fn(run_id: str, codec: str, chunk_rows: int):
     return encode_group
 
 
+def _commit_rows(chunks, phys_run_id: str):
+    """Manifest rows, metrics rows and the summary of one attempt, from
+    its chunk rows (a pyarrow Table of ``_COMMIT_COLS``).
+
+    Per (bucket, salt) group, the manifest row counts EVERY chunk row
+    (an error marker, chunk -1, included), sums rows and block bytes,
+    and is status 'error' when the group holds an error marker, else
+    'done' (error groups stay pending — retried on resume — and are
+    never visible to decode: reference O2 error isolation). Per (group, column), the metrics row takes the max codec
+    name and the summed bytes over the group's real chunks (chunk >= 0)
+    from the chunk's meta JSON. The summary totals the done groups;
+    ``chunks`` is their block count.
+
+    Driver memory: one small row per chunk — about one per group at the
+    default chunk_rows = salt_rows — the same order as the manifest
+    rows themselves, i.e. metadata (see localframe.py)."""
+    groups: dict = {}
+    columns: dict = {}
+    cols = (chunks.column(c).to_pylist() for c in _COMMIT_COLS)
+    for bucket, salt, chunk, n_rows, blk_bytes, meta in zip(*cols):
+        g = groups.setdefault((bucket, salt), [0, 0, 0, False])
+        g[0] += 1
+        g[1] += n_rows
+        g[2] += blk_bytes or 0
+        if chunk < 0:
+            g[3] = True
+            continue
+        for col, cm in json.loads(meta).items():
+            m = columns.setdefault((bucket, salt, col), [cm["codec"], 0])
+            m[0] = max(m[0], cm["codec"])
+            m[1] += cm["bytes"]
+    manifest_rows = [
+        (phys_run_id, b, s, n, r, nb, "error" if err else "done")
+        for (b, s), (n, r, nb, err) in groups.items()
+    ]
+    metrics_rows = [
+        (phys_run_id, b, s, col, codec, nb) for (b, s, col), (codec, nb) in columns.items()
+    ]
+    done = [g for g in groups.values() if not g[3]]
+    summary = {
+        "groups": len(done),
+        "errors": len(groups) - len(done),
+        "rows": sum(g[1] for g in done),
+        "encoded_bytes": sum(g[2] for g in done),
+        "chunks": sum(g[0] for g in done),
+    }
+    return manifest_rows, metrics_rows, summary
+
+
 def encode_table(
     spark: SparkSession,
     df: DataFrame,
@@ -231,7 +291,8 @@ def encode_table(
     commit point: readers see either the old blocks (commit absent) or
     the new blocks only (commit present), never both.
 
-    Returns a summary dict (groups encoded, rows, encoded bytes).
+    Returns a summary dict (groups encoded, groups errored, rows,
+    encoded bytes, blocks written).
     ``max_groups`` bounds how many pending groups this invocation
     commits — used by the kill/resume test and usable as incremental
     batch commit on a real cluster. ``resume_scope='run'`` restricts
@@ -347,36 +408,20 @@ def encode_table(
         )
     io.append(blocks, ckpt.BLOCKS, compression="uncompressed")
 
-    # ---- commit: derive manifest + metrics from what actually landed.
-    # blk_bytes was computed inside the UDF, so these commit jobs only
-    # scan the small non-binary columns (parquet column pruning).
-    # attempt-scoped: only THIS invocation's rows, never a prior
-    # same-run_id attempt's (replay-safety — see docstring)
-    written = io.read(ckpt.BLOCKS).where(F.col("run_id") == phys_run_id)
-    manifest = (
-        written.select("bucket", "salt", "chunk", "n_rows", "blk_bytes")
-        .groupBy("bucket", "salt")
-        .agg(
-            F.count("*").cast("int").alias("n_chunks"),
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("blk_bytes").alias("encoded_bytes"),
-            F.max((F.col("chunk") == -1).cast("int")).alias("has_err"),
-        )
-        .select(
-            F.lit(phys_run_id).alias("run_id"),
-            "bucket",
-            "salt",
-            "n_chunks",
-            "n_rows",
-            "encoded_bytes",
-            # error groups stay pending (retried on resume) and are
-            # never visible to decode — reference O2 error isolation
-            F.when(F.col("has_err") == 1, F.lit("error"))
-            .otherwise(F.lit("done"))
-            .alias("status"),
-        )
+    # ---- commit: ONE column-pruned scan reads back this attempt's chunk
+    # rows (blk_bytes and meta were computed inside the UDF, so no
+    # binary block column is read); the manifest, metrics, maintenance
+    # error check and summary are then bookkeeping on the driver.
+    # Attempt-scoped: only THIS invocation's rows, never a prior
+    # same-run_id attempt's (replay-safety — see docstring).
+    chunks = (
+        io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA)
+        .where(F.col("run_id") == phys_run_id)
+        .select(*_COMMIT_COLS)
+        .toArrow()
     )
-    if retire_triples is not None:
+    manifest_rows, metrics_rows, summary = _commit_rows(chunks, phys_run_id)
+    if retire_triples is not None and summary["errors"]:
         # maintenance rewrites are ALL-OR-NOTHING: if any group's
         # re-encode errored, commit NOTHING — appending the retire rows
         # would permanently hide the error groups' source data (data
@@ -385,20 +430,11 @@ def encode_table(
         # manifest-less orphans (invisible; vacuum reclaims them) and
         # the old table untouched — the same guarantee as any crash
         # before the commit point.
-        n_err = (
-            written.where(F.col("chunk") == -1).limit(1).count()
+        raise RuntimeError(
+            "maintenance re-encode hit per-group errors; commit aborted — "
+            "old triples remain visible, new blocks are orphaned "
+            "(reclaimable via vacuum). Fix the cause and re-run."
         )
-        if n_err:
-            raise RuntimeError(
-                "maintenance re-encode hit per-group errors; commit aborted — "
-                "old triples remain visible, new blocks are orphaned "
-                "(reclaimable via vacuum). Fix the cause and re-run."
-            )
-        manifest = manifest.unionByName(ckpt.retire_rows(retire_triples))
-        # the retire+done swap must land in ONE task commit: the
-        # manifest frame here is one row per group (tiny), so a single
-        # part file keeps the multi-file-commit window out of the swap
-        manifest = manifest.coalesce(1)
 
     # table metadata: partitioning parameters decoders need for
     # selective reads (bucket pruning / conv_id point lookup) and
@@ -410,12 +446,7 @@ def encode_table(
     # run (harmless — it only widens the candidate bucket set), never
     # a VISIBLE run without its geometry, which would make
     # decode_conversation's bucket pruning miss its rows forever.
-    from .localframe import local_df
-    from .schema import TABLE_META_SCHEMA
-
     ts_lo, ts_hi = span if span is not None else (None, None)
-    # driver-local one-row frame: the Arrow local-relation path, not a
-    # 32-slice Python RDD whose write costs ~0.7 s (localframe.py)
     meta_df = local_df(
         spark,
         [
@@ -434,49 +465,26 @@ def encode_table(
     )
     io.append(meta_df, ckpt.TABLE_META, compression="snappy")
 
-    io.append(manifest, ckpt.MANIFEST, compression="snappy")
-
-    # per-(group, column) codec metrics from the meta JSON
-    meta_schema = "map<string, struct<codec:string, bytes:bigint>>"
-    metrics = (
-        written.where(F.col("chunk") >= 0)
-        .select("bucket", "salt", F.from_json("meta", meta_schema).alias("m"))
-        .select("bucket", "salt", F.explode("m").alias("column", "cm"))
-        .groupBy("bucket", "salt", "column")
-        .agg(
-            F.max(F.col("cm.codec")).alias("codec"),
-            F.sum(F.col("cm.bytes")).alias("encoded_bytes"),
+    # every commit is ONE part file written by one task: an n-row local
+    # frame would otherwise write min(n, defaultParallelism) files, and
+    # each extra manifest file costs every later read. A benign rerun
+    # that wrote no chunk rows appends nothing.
+    if manifest_rows or retire_triples is not None:
+        manifest = local_df(spark, manifest_rows, MANIFEST_SCHEMA)
+        if retire_triples is not None:
+            # the superseded triples' 'retired' rows ride in the SAME
+            # file as this run's 'done' rows: the swap is one commit
+            manifest = manifest.unionByName(ckpt.retire_rows(retire_triples))
+        io.append(manifest.coalesce(1), ckpt.MANIFEST, compression="snappy")
+    if metrics_rows:
+        io.append(
+            local_df(spark, metrics_rows, METRICS_SCHEMA).coalesce(1),
+            ckpt.METRICS,
+            compression="snappy",
         )
-        .select(
-            F.lit(phys_run_id).alias("run_id"),
-            "bucket",
-            "salt",
-            "column",
-            "codec",
-            "encoded_bytes",
-        )
-    )
-    io.append(metrics, ckpt.METRICS, compression="snappy")
-
-    summary = (
-        io.read(ckpt.MANIFEST)
-        .where(F.col("run_id") == phys_run_id)
-        .agg(
-            F.count(F.when(F.col("status") == "done", 1)).alias("groups"),
-            F.count(F.when(F.col("status") == "error", 1)).alias("errors"),
-            F.sum(F.when(F.col("status") == "done", F.col("n_rows"))).alias("rows"),
-            F.sum(
-                F.when(F.col("status") == "done", F.col("encoded_bytes"))
-            ).alias("encoded_bytes"),
-        )
-        .collect()[0]
-    )
     return {
         "run_id": run_id,
         "physical_run_id": phys_run_id,
-        "groups": summary["groups"] or 0,
-        "errors": summary["errors"] or 0,
-        "rows": summary["rows"] or 0,
-        "encoded_bytes": summary["encoded_bytes"] or 0,
+        **summary,
         "num_buckets": num_buckets,
     }

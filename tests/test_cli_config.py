@@ -117,3 +117,32 @@ def test_wdict_dtrans_reachable_from_cli(spark, src_dir, tmp_path, monkeypatch):
 
     ref = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(src_dir)
     assert verify_decode(decode_table(spark, io), ref)["ok"]
+
+
+def test_report_reads_pinned_metrics_and_metricsless_table(
+    spark, src_dir, tmp_path, capsys, poisoned_encode
+):
+    """report reads the metrics table with its pinned schema, and still
+    reports a table whose only commit was all error groups — such a
+    commit appends no metrics file at all."""
+    from parquet_converter_spark.encode_job import encode_table
+    from parquet_converter_spark.schema import ENCODED_COLUMNS, TRANSCRIPT_SCHEMA
+
+    def report(out):
+        capsys.readouterr()
+        assert main(["report", "--out", out]) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    good = str(tmp_path / "good")
+    assert main(["encode", "--input", src_dir, "--out", good, "--salt-rows", "2048"]) == 0
+    rep = report(good)
+    assert rep["groups"] > 0
+    assert {c["column"] for c in rep["codecs"]} == set(ENCODED_COLUMNS)
+
+    bad = str(tmp_path / "bad")
+    src = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(src_dir)
+    poisoned = src.withColumn("text", F.concat(F.lit("POISON "), F.coalesce("text", F.lit(""))))
+    s = encode_table(spark, poisoned, ParquetDirTableIO(spark, bad), salt_rows=2048)
+    assert s["groups"] == 0 and s["errors"] > 0
+    rep = report(bad)
+    assert rep["groups"] == 0 and rep["codecs"] == []

@@ -5,46 +5,15 @@ group, and a later resume retries exactly the failed group."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from parquet_converter_spark import checkpoint as ckpt
-from parquet_converter_spark import encode_job
 from parquet_converter_spark.decode_job import decode_table
 from parquet_converter_spark.encode_job import encode_table
 from parquet_converter_spark.schema import TRANSCRIPT_SCHEMA
 from parquet_converter_spark.synth import synth_pandas
 from parquet_converter_spark.tableio import ParquetDirTableIO
 from parquet_converter_spark.verify import verify_decode
-
-
-@pytest.fixture()
-def poisoned_encode(monkeypatch):
-    """Make the block encoders blow up for one specific group's data
-    (patched on both the pandas and the Arrow hot paths; the UDF
-    builders resolve these names at build time, so the patched
-    versions ship to the workers)."""
-    real = encode_job.encode_block
-    real_arrow = encode_job.encode_block_arrow
-
-    def poisoned(series, dtype, codec=None):
-        if dtype == "str" and series.astype(str).str.contains("POISON", na=False).any():
-            raise RuntimeError("simulated kernel failure")
-        return real(series, dtype, codec)
-
-    def poisoned_arrow(arr, dtype, codec=None):
-        if dtype == "str":
-            import pyarrow.compute as pc
-
-            hits = pc.match_substring(arr.cast("string"), "POISON")
-            if pc.any(pc.fill_null(hits, False)).as_py():
-                raise RuntimeError("simulated kernel failure")
-        return real_arrow(arr, dtype, codec)
-
-    monkeypatch.setattr(encode_job, "encode_block", poisoned)
-    monkeypatch.setattr(encode_job, "encode_block_arrow", poisoned_arrow)
-    yield
-    # monkeypatch auto-restores
 
 
 def test_error_group_isolated_and_retried(spark, tmp_path, poisoned_encode):
