@@ -76,7 +76,7 @@ def main() -> int:
 
     # --- engine paths (not queries() entries but bench-timed)
     from parquet_converter_spark import checkpoint as ckpt
-    from parquet_converter_spark.encode_job import _encode_group_arrow_fn, encode_table
+    from parquet_converter_spark.encode_job import _encode_group_fn, encode_table
     from parquet_converter_spark.partitioning import with_group_keys
     from parquet_converter_spark.schema import BLOCKS_STORED_SCHEMA, TRANSCRIPT_SCHEMA
     from parquet_converter_spark.synth import synth_distributed
@@ -90,7 +90,7 @@ def main() -> int:
     df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(src)
     keyed = with_group_keys(df, 64, 32_768)
     blocks = keyed.groupBy("bucket", "salt").applyInArrow(
-        _encode_group_arrow_fn("plan", "auto", 65_536), schema=BLOCKS_STORED_SCHEMA
+        _encode_group_fn("plan", "auto", 65_536), schema=BLOCKS_STORED_SCHEMA
     )
     dump("encode_main", blocks)
 

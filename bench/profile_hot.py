@@ -97,11 +97,11 @@ def main() -> None:
         mark("encode: raw scan -> noop")
         keyed = with_group_keys(df, 64, 32_768)
         spark.sparkContext.setJobDescription("encode: shuffle+groups noop")
-        from parquet_converter_spark.encode_job import _encode_group_arrow_fn
+        from parquet_converter_spark.encode_job import _encode_group_fn
         from parquet_converter_spark.schema import BLOCKS_STORED_SCHEMA
 
         blocks = keyed.groupBy("bucket", "salt").applyInArrow(
-            _encode_group_arrow_fn("prof", "auto", 65_536), schema=BLOCKS_STORED_SCHEMA
+            _encode_group_fn("prof", "auto", 65_536), schema=BLOCKS_STORED_SCHEMA
         )
         blocks.write.format("noop").mode("overwrite").save()
         mark("encode: shuffle+applyInArrow -> noop")

@@ -1,25 +1,23 @@
-"""Arrow-native block encode/decode — the zero-object hot path.
+"""Block encode/decode on pyarrow Arrays — the engine's one block path.
 
-blocks.py's pandas API remains the reference implementation (and the
-selector's sampling path); this module speaks pyarrow Arrays end to
-end so the grouped-map UDF never materializes Python objects:
+Every caller (the grouped-map encode UDF, the decode and corrupt-block
+scans, the embedding codec metrics) hands in and gets back pa.Arrays,
+so no UDF materializes Python objects per value:
 
     pa.Array --(validity bitmap + raw buffers)--> codec kernels -> block
     block -> buffers -> pa.Array.from_buffers (zero copies on decode)
 
-Used by encode_job's applyInArrow / decode_job's mapInArrow variants.
-Block format is IDENTICAL to blocks.py — both paths interoperate.
+The frame layout, codec registry and selector live in blocks.py.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from .blocks import (
+    _HDR,
+    _U64,
     CODEC_IDS,
     CODEC_NAMES,
     DTYPE_IDS,
@@ -30,9 +28,6 @@ from .blocks import (
     _maybe_compress,
     choose_codec,
 )
-
-_HDR = struct.Struct("<BBBBII")
-_U64 = struct.Struct("<Q")
 
 # Each Spark Python worker is one of N parallel processes on the same
 # host; pyarrow's default kernel thread pool sizes itself to ALL cores,
@@ -50,19 +45,31 @@ ARROW_TYPES = {
     "int64": pa.int64(),
     "ts_us": pa.timestamp("us"),
     "int32": pa.int32(),
+    "f32list": pa.list_(pa.float32()),
 }
 
 
 def _strings_canonical(arr: pa.Array) -> tuple[np.ndarray, bytes]:
     """Non-null string array → (lengths, utf8 concat) via raw buffers."""
     arr = arr.cast(pa.large_string())
-    if isinstance(arr, pa.ChunkedArray):  # pragma: no cover - defensive
-        arr = arr.combine_chunks()
     off = np.frombuffer(arr.buffers()[1], dtype=np.int64, count=len(arr) + 1 + arr.offset)
     off = off[arr.offset : arr.offset + len(arr) + 1]
     data_buf = arr.buffers()[2]
     data = data_buf.to_pybytes()[off[0] : off[-1]] if data_buf is not None else b""
     return np.diff(off).astype(np.int64), data
+
+
+def _vectors_canonical(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Non-null list array → (lengths, flat float32 values).
+
+    The cast narrows float64 elements to float32; values past the
+    float32 range become ±inf, the intended narrowing (bit-identity is
+    defined on the float32 values). Null elements inside a vector read
+    as NaN."""
+    arr = arr.cast(ARROW_TYPES["f32list"])
+    lengths = np.diff(arr.offsets.to_numpy()).astype(np.int64)
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float32, copy=False)
+    return lengths, flat
 
 
 def _extract_arrow(arr: pa.Array, dtype: str):
@@ -73,6 +80,8 @@ def _extract_arrow(arr: pa.Array, dtype: str):
     nn = arr.drop_null()
     if dtype == "str":
         return valid, _strings_canonical(nn)
+    if dtype == "f32list":
+        return valid, _vectors_canonical(nn)
     if dtype == "ts_us":
         ints = nn.cast(pa.timestamp("us")).cast(pa.int64()).to_numpy(zero_copy_only=False)
         return valid, ints.astype(np.int64)
@@ -80,7 +89,9 @@ def _extract_arrow(arr: pa.Array, dtype: str):
 
 
 def encode_block_arrow(arr: pa.Array, dtype: str, codec: str | None = None) -> bytes:
-    """Arrow twin of blocks.encode_block — same frame bytes out."""
+    """Encode one column chunk → framed block bytes.
+
+    codec=None or 'auto' → auto-select via the cost model."""
     valid, canonical = _extract_arrow(arr, dtype)
     n = valid.size
     null_count = int(n - valid.sum())
@@ -92,7 +103,7 @@ def encode_block_arrow(arr: pa.Array, dtype: str, codec: str | None = None) -> b
         _HDR.pack(1, CODEC_IDS[codec], DTYPE_IDS[dtype], comp_flag, n, null_count)
     )
     if null_count > 0:
-        out += np.packbits(valid).tobytes()  # MSB-first, same as blocks.py
+        out += np.packbits(valid).tobytes()  # MSB-first
     out += _U64.pack(len(payload))
     out += wrapped
     return bytes(out)
@@ -103,8 +114,17 @@ def _validity_buffer(valid: np.ndarray) -> pa.Buffer:
     return pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
 
 
+def _offsets(valid: np.ndarray, lengths: np.ndarray, dtype) -> pa.Buffer:
+    """Per-row offsets with zero-length slots at the null rows."""
+    full_lengths = np.zeros(valid.size, dtype=dtype)
+    full_lengths[valid] = lengths
+    offsets = np.zeros(valid.size + 1, dtype=dtype)
+    np.cumsum(full_lengths, out=offsets[1:])
+    return pa.py_buffer(offsets.tobytes())
+
+
 def decode_block_arrow(blob: bytes) -> tuple[pa.Array, str]:
-    """Arrow twin of blocks.decode_block — returns a pa.Array."""
+    """Decode a framed block → (pa.Array, codec name)."""
     version, codec_id, dtype_id, comp_flag, n, null_count = _HDR.unpack_from(blob, 0)
     if version != 1:
         raise ValueError(f"unknown block version {version}")
@@ -128,33 +148,29 @@ def decode_block_arrow(blob: bytes) -> tuple[pa.Array, str]:
     vbuf = _validity_buffer(valid) if null_count > 0 else None
     if dtype == "str":
         lengths, data = values
-        full_lengths = np.zeros(n, dtype=np.int64)
-        full_lengths[valid] = lengths
-        offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(full_lengths, out=offsets[1:])
         arr = pa.Array.from_buffers(
             pa.large_string(),
             n,
-            [vbuf, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)],
+            [vbuf, _offsets(valid, lengths, np.int64), pa.py_buffer(data)],
             null_count=null_count,
+        )
+        return arr, codec
+    if dtype == "f32list":
+        lengths, flat = values
+        arr = pa.Array.from_buffers(
+            ARROW_TYPES["f32list"],
+            n,
+            [vbuf, _offsets(valid, lengths, np.int32)],
+            null_count=null_count,
+            children=[pa.array(np.asarray(flat, dtype=np.float32))],
         )
         return arr, codec
 
     full = np.zeros(n, dtype=np.int64)
     full[valid] = values
-    if dtype == "ts_us":
-        arr = pa.Array.from_buffers(
-            pa.timestamp("us"), n, [vbuf, pa.py_buffer(full.tobytes())], null_count=null_count
-        )
-    elif dtype == "int32":
-        arr = pa.Array.from_buffers(
-            pa.int32(),
-            n,
-            [vbuf, pa.py_buffer(full.astype(np.int32).tobytes())],
-            null_count=null_count,
-        )
-    else:
-        arr = pa.Array.from_buffers(
-            pa.int64(), n, [vbuf, pa.py_buffer(full.tobytes())], null_count=null_count
-        )
+    if dtype == "int32":
+        full = full.astype(np.int32)
+    arr = pa.Array.from_buffers(
+        ARROW_TYPES[dtype], n, [vbuf, pa.py_buffer(full.tobytes())], null_count=null_count
+    )
     return arr, codec

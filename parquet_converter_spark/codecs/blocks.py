@@ -1,14 +1,16 @@
-"""Block framing: nulls, dtype tags, optional zstd wrap, codec dispatch.
+"""Block format and codec selection: frame constants, dtype tags, the
+optional zstd wrap, codec dispatch and the sample-based cost model.
 
 A block is the encoded form of one column chunk (the non-null values
-go through a codec from core.py/fsst.py; nulls are carried as a packed
-validity bitmap and re-inserted on decode — value order is preserved,
-so decode is bit-identical).
+go through a codec from core.py/fsst.py/vectors.py; nulls are carried
+as a packed validity bitmap and re-inserted on decode — value order is
+preserved, so decode is bit-identical). arrow_blocks.py builds and
+parses the frames from pyarrow Arrays.
 
 Frame layout (little-endian):
     u8  version (=1)
     u8  codec_id
-    u8  dtype_id          0=str 1=int64 2=ts_us 3=int32
+    u8  dtype_id          0=str 1=int64 2=ts_us 3=int32 4=f32list
     u8  compression       0=raw 1=zstd
     u32 n_rows
     u32 null_count
@@ -27,7 +29,6 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from .core import (
@@ -40,7 +41,7 @@ from .core import (
     WdictCodec,
 )
 from .fsst import FsstCodec
-from .strutil import buf_to_strings, strings_to_buf
+from .strutil import buf_to_strings
 
 _HDR = struct.Struct("<BBBBII")
 _U64 = struct.Struct("<Q")
@@ -100,74 +101,6 @@ def _decompress(flag: int, data: bytes, raw_len: int) -> bytes:
     return out.to_pybytes() if hasattr(out, "to_pybytes") else bytes(out)
 
 
-def _extract(series: pd.Series, dtype: str):
-    """Split a pandas Series into (validity bool[n], non-null canonical values)."""
-    n = len(series)
-    if dtype == "f32list":
-        valid = series.notna().to_numpy()
-        vals = series[valid]
-        lengths = np.fromiter((len(v) for v in vals), dtype=np.int64, count=len(vals))
-        # float64→float32 overflow to ±inf is the INTENDED narrowing
-        # semantics (bit-identity is defined on the f32 values); keep
-        # the warning channel clean for real problems
-        with np.errstate(over="ignore"):
-            flat = (
-                np.concatenate([np.asarray(v, dtype=np.float32) for v in vals])
-                if len(vals)
-                else np.zeros(0, dtype=np.float32)
-            )
-        return valid, (lengths, flat)
-    if dtype == "str":
-        valid = series.notna().to_numpy()
-        vals = series[valid].astype(object).to_numpy()
-        return valid, strings_to_buf(list(vals))
-    if dtype == "ts_us":
-        # Spark timestamps are microsecond precision; store epoch-us int64
-        s = pd.to_datetime(series)
-        valid = s.notna().to_numpy()
-        ints = s[valid].to_numpy().astype("datetime64[us]").astype(np.int64)
-        return valid, ints
-    # int32 / int64 (possibly pandas nullable or float-with-nan from Arrow)
-    valid = series.notna().to_numpy()
-    ints = pd.to_numeric(series[valid]).to_numpy().astype(np.int64)
-    return valid, ints
-
-
-def _restore(valid: np.ndarray, values, dtype: str) -> pd.Series:
-    n = valid.size
-    if dtype == "f32list":
-        lengths, flat = values
-        bounds = np.zeros(len(lengths) + 1, dtype=np.int64)
-        np.cumsum(lengths, out=bounds[1:])
-        vecs = [flat[bounds[i] : bounds[i + 1]].tolist() for i in range(len(lengths))]
-        out = np.full(n, None, dtype=object)
-        out[valid] = np.array(vecs + [None], dtype=object)[:-1] if vecs else []
-        return pd.Series(out, dtype=object)
-    if dtype == "str":
-        lengths, data = values
-        strs = buf_to_strings(lengths, data)
-        out = np.full(n, None, dtype=object)
-        out[valid] = strs
-        return pd.Series(out, dtype=object)
-    if dtype == "ts_us":
-        out = np.full(n, np.datetime64("NaT", "us"), dtype="datetime64[us]")
-        out[valid] = values.astype("datetime64[us]")
-        return pd.Series(out)
-    if dtype == "int32":
-        if valid.all():
-            return pd.Series(values.astype(np.int32))
-        out = pd.array(np.zeros(n, dtype=np.int32), dtype="Int32")
-        out[~valid] = pd.NA
-        out[valid] = values.astype(np.int32)
-        return pd.Series(out)
-    if valid.all():
-        return pd.Series(values.astype(np.int64))
-    out = pd.array(np.zeros(n, dtype=np.int64), dtype="Int64")
-    out[~valid] = pd.NA
-    out[valid] = values
-    return pd.Series(out)
-
-
 def _codec_encode(codec_name: str, dtype: str, canonical) -> bytes:
     codec = CODECS[codec_name]
     if dtype == "str":
@@ -195,8 +128,6 @@ def _str_sample(lengths, data, max_rows: int, max_bytes: int):
     s_lengths = lengths[:take]
     csum = int(s_lengths.sum())
     if csum > max_bytes:
-        import numpy as np
-
         cut = int(np.searchsorted(np.cumsum(s_lengths), max_bytes)) or 1
         s_lengths = s_lengths[:cut]
         csum = int(s_lengths.sum())
@@ -219,8 +150,6 @@ def choose_codec(canonical, dtype: str, sample_n: int = 1024) -> str:
     * dict/RLE are screened out by a cheap cardinality probe when the
       sample is nearly all-distinct (they cannot win there).
     """
-    import numpy as np
-
     if dtype == "str":
         lengths, data = canonical
         n = len(lengths)
@@ -229,10 +158,8 @@ def choose_codec(canonical, dtype: str, sample_n: int = 1024) -> str:
         sample, scale = _str_sample(lengths, data, sample_n, 128 * 1024)
         sizes: dict[str, float] = {}
         # cardinality screen on the sampled rows
-        from .strutil import buf_to_strings
-
         s_vals = buf_to_strings(*sample)
-        uniq_ratio = len(pd.unique(s_vals)) / max(len(s_vals), 1)
+        uniq_ratio = len(set(s_vals)) / max(len(s_vals), 1)
         candidates = ["plain", "wdict"]
         if uniq_ratio < 0.6:
             candidates += ["dict", "rle"]
@@ -307,51 +234,6 @@ def choose_codec(canonical, dtype: str, sample_n: int = 1024) -> str:
         _, wrapped = _maybe_compress(payload)
         sizes[name] = len(wrapped) * scale
     return min(sizes, key=sizes.get) if sizes else "plain"
-
-
-def encode_block(series: pd.Series, dtype: str, codec: str | None = None) -> bytes:
-    """Encode one column chunk → framed block bytes.
-
-    codec=None → auto-select via the cost model.
-    """
-    valid, canonical = _extract(series, dtype)
-    n = valid.size
-    null_count = int(n - valid.sum())
-    if codec is None or codec == "auto":
-        codec = choose_codec(canonical, dtype)
-    payload = _codec_encode(codec, dtype, canonical)
-    comp_flag, wrapped = _maybe_compress(payload)
-    out = bytearray(
-        _HDR.pack(1, CODEC_IDS[codec], DTYPE_IDS[dtype], comp_flag, n, null_count)
-    )
-    if null_count > 0:
-        out += np.packbits(valid).tobytes()
-    out += _U64.pack(len(payload))
-    out += wrapped
-    return bytes(out)
-
-
-def decode_block(blob: bytes) -> tuple[pd.Series, str]:
-    """Decode a framed block → (pandas Series, codec name)."""
-    version, codec_id, dtype_id, comp_flag, n, null_count = _HDR.unpack_from(blob, 0)
-    if version != 1:
-        raise ValueError(f"unknown block version {version}")
-    pos = _HDR.size
-    if null_count > 0:
-        nbytes = (n + 7) // 8
-        valid = np.unpackbits(
-            np.frombuffer(blob, dtype=np.uint8, count=nbytes, offset=pos), count=n
-        ).astype(bool)
-        pos += nbytes
-    else:
-        valid = np.ones(n, dtype=bool)
-    (raw_len,) = _U64.unpack_from(blob, pos)
-    pos += 8
-    payload = _decompress(comp_flag, blob[pos:], raw_len)
-    dtype = DTYPE_NAMES[dtype_id]
-    codec = CODEC_NAMES[codec_id]
-    values = _codec_decode(codec, dtype, payload, int(valid.sum()))
-    return _restore(valid, values, dtype), codec
 
 
 def block_codec(blob: bytes) -> str:

@@ -8,10 +8,9 @@ Each codec exposes, per logical type class:
 
 Values arriving here are the NON-NULL values of a column chunk (the
 block layer strips and restores nulls via a bitmap — see blocks.py),
-so codecs never see NaN/None. All kernels are vectorized numpy; the
-only Python-level loop anywhere in the codec package is the FSST
-regex-substitution callback (fsst.py), which runs per *match*, not
-per row.
+so codecs never see NaN/None. All kernels are vectorized numpy;
+Python-level loops in the codec package run per symbol, subspace or
+candidate codec, never per row or per byte.
 
 Design per SURVEY.md §7.1/§7.3; supersedes the reference's single
 whole-file parquet codec choice (/root/reference/parquet_converter/
@@ -21,7 +20,6 @@ converter.py:241,577 — one static compression codec per file).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from .primitives import (
     bitpack,
@@ -34,7 +32,6 @@ from .primitives import (
     zigzag_decode,
     zigzag_encode,
 )
-from .strutil import buf_to_strings, strings_to_buf
 
 # ---------------------------------------------------------------------------
 # plain

@@ -14,9 +14,10 @@ This implementation is written from scratch for this engine:
   filled with the most frequent single bytes so uncovered bytes don't
   all pay the 2-byte escape penalty.
 * **Compression** — the column chunk's concatenated UTF-8 buffer is
-  compressed in ONE pass with a longest-match-first ``re`` alternation
-  (the CPython regex engine is C code; the only Python executed is the
-  per-match replacement lookup — per *match*, never per row).
+  tokenized greedily by a fully vectorized numpy kernel
+  (:func:`compress_vectorized`, one candidate symbol per 2-byte
+  prefix); no Python runs per byte, match or row. A C-regex scan of
+  the same greedy compressor is kept in the tests as the oracle.
 * **Decompression** — fully vectorized numpy: maximal runs of the
   escape byte are disambiguated positionally (within a maximal 0xFF
   run, even offsets are escapes), then symbols expand via
@@ -34,7 +35,6 @@ real lightweight encoding, per BASELINE.json north_rule.
 
 from __future__ import annotations
 
-import re
 import struct
 
 import numpy as np
@@ -107,16 +107,6 @@ def build_symbol_table(sample: bytes, max_symbols: int = MAX_SYMBOLS) -> list[by
         seen.add(sym)
         symbols.append(sym)
     return symbols
-
-
-def _compile(symbols: list[bytes]):
-    """Longest-first alternation → greedy longest match at each position."""
-    ordered = sorted(symbols, key=lambda s: (-len(s), s))
-    code_of = {s: bytes([i]) for i, s in enumerate(symbols)}
-    parts = [re.escape(s) for s in ordered]
-    parts.append(b"(?s:.)")  # fallback: any single byte → escape
-    pattern = re.compile(b"|".join(parts))
-    return pattern, code_of
 
 
 def compress_vectorized(data: bytes, symbols: list[bytes]) -> bytes:
@@ -196,7 +186,7 @@ def compress_vectorized(data: bytes, symbols: list[bytes]) -> bytes:
     # mp[k] + len_k) over match indices only. The taken set is the
     # orbit of match 0 under succ, marked in ceil(log2 M) vectorized
     # rounds (M = #match positions ≪ n bytes — this is what makes the
-    # kernel competitive with the C regex scan; the old byte-domain
+    # kernel competitive with a C regex scan; the old byte-domain
     # doubling cost ~log2(n) passes over all n bytes).
     has_m = best_len >= 2
     mp = np.flatnonzero(has_m)
@@ -252,28 +242,6 @@ def _within(lengths: np.ndarray) -> np.ndarray:
     total = int(lengths.sum())
     ends = np.cumsum(lengths)
     return np.arange(total, dtype=np.int64) - np.repeat(ends - lengths, lengths)
-
-
-def compress(data: bytes, symbols: list[bytes]) -> bytes:
-    if not data:
-        return b""
-    if not symbols:
-        # degenerate (table build saw no data): escape every byte,
-        # vectorized by interleaving an escape column with the data
-        arr = np.frombuffer(data, dtype=np.uint8)
-        out = np.empty(arr.size * 2, dtype=np.uint8)
-        out[0::2] = ESCAPE
-        out[1::2] = arr
-        return out.tobytes()
-    pattern, code_of = _compile(symbols)
-    esc = bytes([ESCAPE])
-
-    def repl(m, _get=code_of.get, _esc=esc):
-        s = m.group(0)
-        c = _get(s)
-        return c if c is not None else _esc + s
-
-    return pattern.sub(repl, data)
 
 
 def decompress(comp: bytes, symbols: list[bytes]) -> bytes:
@@ -344,22 +312,9 @@ class FsstCodec:
 
     name = "fsst"
 
-    #: compression kernel: "numpy" (default — pure vectorized ops end
-    #: to end: prefix-bucket dispatch, per-symbol slice verification,
-    #: exact-greedy tokenization via pointer-doubling reachability) or
-    #: "regex" (ONE C-level scan; Python runs per MATCH, never per
-    #: row/byte). Measured on real payloads (r3, BENCH/BASELINE.md):
-    #: identical ratio on both corpora; numpy ~13% faster on 12 MB of
-    #: transcript text (4.93 s vs 5.69 s best-rep) and equal ±2% on the
-    #: sf0.1 documents text — so numpy is the default.
-    kernel = "numpy"
-
     def encode_strs(self, lengths: np.ndarray, data: bytes) -> bytes:
         symbols = build_symbol_table(data)
-        if self.kernel == "numpy":
-            comp = compress_vectorized(data, symbols)
-        else:
-            comp = compress(data, symbols)
+        comp = compress_vectorized(data, symbols)
         table = bytearray(struct.pack("<H", len(symbols)))
         for s in symbols:
             table.append(len(s))

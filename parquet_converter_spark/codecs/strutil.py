@@ -2,7 +2,7 @@
 
 A string column chunk is carried as ``(lengths: np.int64[n], data: bytes)``
 — the UTF-8 concatenation of all values plus per-value byte lengths.
-Conversion to/from arrays goes through pyarrow buffers (vectorized,
+Conversion back to strings goes through pyarrow buffers (vectorized,
 zero per-row Python).
 """
 
@@ -12,18 +12,8 @@ import numpy as np
 import pyarrow as pa
 
 
-def strings_to_buf(values) -> tuple[np.ndarray, bytes]:
-    """values: sequence of non-null Python str → (lengths, utf8 concat)."""
-    arr = pa.array(values, type=pa.large_string())
-    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int64, count=len(arr) + 1)
-    data_buf = arr.buffers()[2]
-    data = data_buf.to_pybytes()[offsets[0] : offsets[-1]] if data_buf is not None else b""
-    lengths = np.diff(offsets).astype(np.int64)
-    return lengths, data
-
-
 def buf_to_strings(lengths: np.ndarray, data: bytes) -> np.ndarray:
-    """Inverse of :func:`strings_to_buf` → numpy object array of str."""
+    """(lengths, utf8 concat) → numpy object array of str."""
     n = len(lengths)
     offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lengths, out=offsets[1:])

@@ -28,7 +28,7 @@ Lossy codecs are NEVER auto-selected (absent from ``ELIGIBLE``) and
 are rejected by the table-encode CLI whitelist — the engine's default
 invariant stays bit-identical decode (BASELINE.json north_rule). They
 are reachable only through explicit opt-in
-(``encode_block(..., codec="fq8")`` /
+(``encode_block_arrow(..., codec="fq8")`` /
 ``operators.embcodec.lossy_compression_metrics``), which reports the
 realized error alongside the ratio.
 """

@@ -1,21 +1,18 @@
 """The decode pipeline: committed blocks → reconstructed transcript rows.
 
-``mapInPandas`` over block rows — each block row expands to up to
+``mapInArrow`` over block rows — each block row expands to up to
 chunk_rows transcript rows, all decoded with the vectorized numpy
-kernels (no per-row Python). Decode is embarrassingly parallel: no
-shuffle at all; global order is re-established only where a consumer
-asks for it (verification sorts by (conv_id, turn_idx)).
+kernels straight into Arrow buffers (no per-row Python). Decode is
+embarrassingly parallel: no shuffle at all; global order is
+re-established only where a consumer asks for it (verification sorts
+by (conv_id, turn_idx)).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from . import checkpoint as ckpt
-from .codecs.blocks import decode_block
 from .schema import ENCODED_COLUMNS, TRANSCRIPT_SCHEMA
 
 #: highest table format this decoder understands (block frames carry
@@ -51,7 +48,6 @@ def decode_table(
     io,
     buckets: list[int] | None = None,
     columns: list[str] | None = None,
-    arrow_native: bool = True,
     on_error: str = "raise",
     ts_range: tuple | None = None,
     conv_range: tuple | None = None,
@@ -127,36 +123,12 @@ def decode_table(
             & (F.col("conv_max").isNull() | (F.col("conv_max") >= F.lit(clo)))
         )
     blocks = blocks.select(*[f"{c}_blk" for c in cols])
-    skip = on_error == "skip"
-    if arrow_native:
-        return blocks.mapInArrow(_decode_batches_arrow_cols(cols, skip), schema=out_schema)
-    return blocks.mapInPandas(_decode_batches_cols(cols, skip), schema=out_schema)
+    return blocks.mapInArrow(
+        _decode_batches_cols(cols, on_error == "skip"), schema=out_schema
+    )
 
 
 def _decode_batches_cols(cols: list[str], skip_errors: bool = False):
-    def fn(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            for _, row in pdf.iterrows():
-                out = {}
-                try:
-                    for col in cols:
-                        series, _codec = decode_block(bytes(row[f"{col}_blk"]))
-                        out[col] = series.reset_index(drop=True)
-                    # cross-column guard: corrupted row counts that decode
-                    # without raising must NOT NaN-pad via index alignment
-                    lens = {c: len(s) for c, s in out.items()}
-                    if len(set(lens.values())) > 1:
-                        raise ValueError(f"column length mismatch in block: {lens}")
-                except Exception:
-                    if skip_errors:
-                        continue
-                    raise
-                yield pd.DataFrame(out)
-
-    return fn
-
-
-def _decode_batches_arrow_cols(cols: list[str], skip_errors: bool = False):
     def fn(iterator):
         import pyarrow as pa
 
@@ -191,36 +163,35 @@ def _decode_batches_arrow_cols(cols: list[str], skip_errors: bool = False):
 def corrupt_blocks(spark: SparkSession, io) -> DataFrame:
     """Diagnostic scan: try-decode every committed block and report the
     failures as (bucket, salt, chunk, column, error) rows. Distributed
-    mapInPandas, one pass over the blocks table; empty result = clean."""
+    mapInArrow, one pass over the blocks table; empty result = clean."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    def probe(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            rows = []
-            for _, row in pdf.iterrows():
+    out_schema = pa.schema(
+        [("bucket", pa.int32()), ("salt", pa.int64()), ("chunk", pa.int32()),
+         ("column", pa.string()), ("error", pa.string())]
+    )
+
+    def probe(iterator):
+        from .codecs.arrow_blocks import decode_block_arrow
+
+        for batch in iterator:
+            d = batch.to_pydict()
+            bad = {name: [] for name in out_schema.names}
+            for i in range(batch.num_rows):
                 for col in ENCODED_COLUMNS:
                     try:
-                        decode_block(bytes(row[f"{col}_blk"]))
+                        decode_block_arrow(bytes(d[f"{col}_blk"][i]))
                     except Exception as exc:  # noqa: BLE001 — diagnostic surface
-                        rows.append(
-                            {
-                                "bucket": int(row["bucket"]),
-                                "salt": int(row["salt"]),
-                                "chunk": int(row["chunk"]),
-                                "column": col,
-                                "error": repr(exc)[:500],
-                            }
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["bucket", "salt", "chunk", "column", "error"],
-            )
+                        row = (d["bucket"][i], d["salt"][i], d["chunk"][i], col, repr(exc)[:500])
+                        for name, v in zip(out_schema.names, row):
+                            bad[name].append(v)
+            yield pa.RecordBatch.from_pydict(bad, schema=out_schema)
 
     blocks = ckpt.committed_blocks(io).select(
         "bucket", "salt", "chunk", *[f"{c}_blk" for c in ENCODED_COLUMNS]
     )
-    return blocks.mapInPandas(
-        probe, "bucket int, salt long, chunk int, column string, error string"
-    )
+    return blocks.mapInArrow(probe, from_arrow_schema(out_schema))
 
 
 def decode_time_slice(
@@ -229,7 +200,6 @@ def decode_time_slice(
     lo,
     hi,
     columns: list[str] | None = None,
-    arrow_native: bool = True,
     on_error: str = "raise",
 ) -> DataFrame:
     """Exact time-window decode: zone-map block skipping + the exact
@@ -243,8 +213,7 @@ def decode_time_slice(
     if cols is not None and "ts" not in cols:
         cols = [*cols, "ts"]  # the exact filter needs ts; keep caller's projection after
     df = decode_table(
-        spark, io, columns=cols, arrow_native=arrow_native,
-        on_error=on_error, ts_range=(lo, hi),
+        spark, io, columns=cols, on_error=on_error, ts_range=(lo, hi),
         # the exact row filter below excludes null ts, so blocks proven
         # all-null by their ts_nulls stat are skipped, not decoded
         skip_all_null_ts_blocks=True,
@@ -259,7 +228,6 @@ def decode_conversation(
     spark: SparkSession,
     io,
     conv_id: str,
-    arrow_native: bool = True,
     on_error: str = "raise",
     ts_range: tuple | None = None,
 ) -> DataFrame:
@@ -308,8 +276,8 @@ def decode_conversation(
     # buckets, conv zone maps prune further — only blocks whose
     # [conv_min, conv_max] covers this id decode at all
     df = decode_table(
-        spark, io, buckets=buckets, arrow_native=arrow_native,
-        on_error=on_error, conv_range=(conv_id, conv_id), ts_range=ts_range,
+        spark, io, buckets=buckets, on_error=on_error,
+        conv_range=(conv_id, conv_id), ts_range=ts_range,
     )
     df = df.where(F.col("conv_id") == conv_id)
     if ts_range is not None:

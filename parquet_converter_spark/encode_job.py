@@ -1,7 +1,7 @@
 """The encode pipeline (SURVEY.md §3.4):
 
     source → resume anti-join → groupBy(bucket, salt)
-           → applyInPandas(sort, chunk, encode per column)
+           → applyInArrow(sort, chunk, encode per column)
            → blocks table + manifest + metrics commit
 
 All per-value work happens inside the grouped-map UDF on Arrow
@@ -16,12 +16,11 @@ import json
 import time
 import uuid
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import checkpoint as ckpt
 from .codecs.arrow_blocks import encode_block_arrow
-from .codecs.blocks import block_codec, encode_block
+from .codecs.blocks import block_codec
 from .partitioning import (
     DEFAULT_SALT_ROWS,
     estimate_input_rows,
@@ -55,11 +54,11 @@ def _codec_for(codec, col: str):
     return codec
 
 
-def _encode_group_arrow_fn(run_id: str, codec, chunk_rows: int):
-    """Arrow-native grouped-map UDF (applyInArrow): sorts, chunks, and
-    encodes straight from pa.Array buffers — zero pandas objects. Falls
-    back to an error marker row on failure (same contract as the
-    pandas path)."""
+def _encode_group_fn(run_id: str, codec, chunk_rows: int):
+    """Build the grouped-map UDF (applyInArrow). Everything below runs
+    executor-side on one (bucket, salt) group at a time: it sorts,
+    chunks, and encodes straight from pa.Array buffers — zero pandas
+    objects."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -132,6 +131,11 @@ def _encode_group_arrow_fn(run_id: str, codec, chunk_rows: int):
                 rows.append(row)
             return _out_table(rows)
         except Exception as exc:  # noqa: BLE001 — per-group error isolation
+            # the reference captures per-file errors into stats and keeps
+            # going (converter.py:226-233); the distributed analog is an
+            # error marker row: chunk=-1, no blocks, error in meta. The
+            # commit step turns it into a status='error' manifest row, so
+            # the group is retried on resume and never read by decode.
             err = {
                 "bucket": bucket,
                 "salt": salt,
@@ -141,70 +145,6 @@ def _encode_group_arrow_fn(run_id: str, codec, chunk_rows: int):
                 "blk_bytes": 0,
             }
             return _out_table([err])
-
-    return encode_group
-
-
-def _encode_group_fn(run_id: str, codec: str, chunk_rows: int):
-    """Build the grouped-map UDF. Everything below runs executor-side
-    on one (bucket, salt) group at a time."""
-
-    def encode_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket, salt = int(key[0]), int(key[1])
-        try:
-            pdf = pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort")
-            out_rows = []
-            n = len(pdf)
-            for chunk_idx, start in enumerate(range(0, n, chunk_rows)):
-                part = pdf.iloc[start : start + chunk_rows]
-                row: dict = {
-                    "bucket": bucket,
-                    "salt": salt,
-                    "chunk": chunk_idx,
-                    "n_rows": len(part),
-                }
-                meta = {}
-                blk_bytes = 0
-                for col in ENCODED_COLUMNS:
-                    blob = encode_block(part[col], COLUMN_DTYPES[col], _codec_for(codec, col))
-                    row[f"{col}_blk"] = bytearray(blob)
-                    meta[col] = {"codec": block_codec(blob), "bytes": len(blob)}
-                    blk_bytes += len(blob)
-                row["meta"] = json.dumps(meta)
-                row["blk_bytes"] = blk_bytes
-                # zone maps (see arrow path): sorted conv bounds + ts min/max
-                row["conv_min"] = part["conv_id"].iloc[0]
-                row["conv_max"] = part["conv_id"].iloc[-1]
-                ts = part["ts"].dropna()
-                row["ts_min"] = ts.min() if len(ts) else None
-                row["ts_max"] = ts.max() if len(ts) else None
-                row["ts_nulls"] = int(len(part) - len(ts))
-                out_rows.append(row)
-            out = pd.DataFrame(out_rows)
-        except Exception as exc:  # noqa: BLE001 — per-group error isolation
-            # the reference captures per-file errors into stats and keeps
-            # going (converter.py:226-233); the distributed analog is an
-            # error marker row: chunk=-1, no blocks, error in meta. The
-            # commit step turns it into a status='error' manifest row, so
-            # the group is retried on resume and never read by decode.
-            err_row = {
-                "bucket": bucket,
-                "salt": salt,
-                "chunk": -1,
-                "n_rows": 0,
-                "meta": json.dumps({"error": repr(exc)[:2000]}),
-                "blk_bytes": 0,
-                "ts_min": None,
-                "ts_max": None,
-                "ts_nulls": None,
-                "conv_min": None,
-                "conv_max": None,
-            }
-            for col in ENCODED_COLUMNS:
-                err_row[f"{col}_blk"] = None
-            out = pd.DataFrame([err_row])
-        out["run_id"] = run_id
-        return out
 
     return encode_group
 
@@ -270,7 +210,6 @@ def encode_table(
     resume: bool = True,
     max_groups: int | None = None,
     resume_scope: str = "global",
-    arrow_native: bool = True,
     time_bucket=None,
     retire_triples: DataFrame | None = None,
 ) -> dict:
@@ -396,16 +335,9 @@ def encode_table(
             pending = F.broadcast(pending)
         todo = keyed.join(pending, ["bucket", "salt"], "left_semi")
 
-    grouped = todo.groupBy("bucket", "salt")
-    if arrow_native:
-        blocks = grouped.applyInArrow(
-            _encode_group_arrow_fn(phys_run_id, codec, chunk_rows),
-            schema=BLOCKS_STORED_SCHEMA,
-        )
-    else:
-        blocks = grouped.applyInPandas(
-            _encode_group_fn(phys_run_id, codec, chunk_rows), schema=BLOCKS_STORED_SCHEMA
-        )
+    blocks = todo.groupBy("bucket", "salt").applyInArrow(
+        _encode_group_fn(phys_run_id, codec, chunk_rows), schema=BLOCKS_STORED_SCHEMA
+    )
     io.append(blocks, ckpt.BLOCKS, compression="uncompressed")
 
     # ---- commit: ONE column-pruned scan reads back this attempt's chunk

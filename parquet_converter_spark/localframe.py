@@ -9,8 +9,8 @@ These helpers keep metadata-sized frames on the fast paths:
 
 * :func:`local_df` — build via a pyarrow Table (a JVM LocalRelation:
   ~0.2 s evaluation, no Python workers);
-* :func:`empty_df` — an empty frame as a projected ``range(0)``
-  (pure JVM, no RDD at all);
+* :func:`empty_df` — an empty frame from an empty pyarrow Table
+  (an empty LocalRelation, no RDD at all);
 * :func:`write_local_parquet` — write driver-local rows as ONE parquet
   file via pyarrow directly (no Spark job; for driver-owned metadata
   directories like index centroids, not for ``TableIO``-managed
@@ -22,17 +22,18 @@ anything row-scale must stay distributed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
 def empty_df(spark: SparkSession, schema: StructType) -> DataFrame:
-    """Empty DataFrame with ``schema`` — a projected ``range(0)``
-    (LocalRelation after optimization) instead of an empty Python RDD
-    whose evaluation still schedules ``defaultParallelism`` tasks."""
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
+    """Empty DataFrame whose ``.schema == schema``, nullability
+    included — an empty LocalRelation built from an empty pyarrow Table
+    instead of an empty Python RDD whose evaluation still schedules
+    ``defaultParallelism`` tasks."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:

@@ -104,7 +104,7 @@ def _decode_triples(
     blocks = io.read(ckpt.BLOCKS, BLOCKS_STORED_SCHEMA).join(
         keys, ["bucket", "salt", "run_id"], "left_semi"
     )
-    from .decode_job import _decode_batches_arrow_cols
+    from .decode_job import _decode_batches_cols
 
     import pyspark.sql.types as T
 
@@ -113,7 +113,7 @@ def _decode_triples(
     cols = list(ENCODED_COLUMNS) if cols is None else list(cols)
     out_schema = T.StructType([TRANSCRIPT_SCHEMA[c] for c in cols])
     return blocks.select(*[f"{c}_blk" for c in cols]).mapInArrow(
-        _decode_batches_arrow_cols(cols, False), schema=out_schema
+        _decode_batches_cols(cols, False), schema=out_schema
     )
 
 

@@ -1,6 +1,6 @@
 """Lossless float-vector codec metrics over an embedding column.
 
-Distributed shape: ``mapInPandas`` emits ONE metrics row per Arrow
+Distributed shape: ``mapInArrow`` emits ONE metrics row per Arrow
 batch (so the work parallelizes across however many partitions the
 scan produces — no ``coalesce``), and a final single-row aggregate
 merges the per-batch rows. The roundtrip check is fully vectorized
@@ -16,45 +16,60 @@ bit-identity on the flattened float32 buffers.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-_SCHEMA = (
-    "n_vecs long, codec string, raw_bytes long, "
-    "encoded_bytes long, roundtrip_ok boolean"
+from parquet_converter_spark.codecs.arrow_blocks import (
+    _extract_arrow,
+    decode_block_arrow,
+    encode_block_arrow,
+)
+
+_SCHEMA = pa.schema(
+    [("n_vecs", pa.int64()), ("codec", pa.string()), ("raw_bytes", pa.int64()),
+     ("encoded_bytes", pa.int64()), ("roundtrip_ok", pa.bool_())]
 )
 
 
-def _batch_metrics(s: pd.Series) -> dict:
+def _rechunk(batches, rows_per_block: int):
+    """Regroup a RecordBatch stream into tables of ``rows_per_block``
+    rows (the last one may be shorter) — zero-copy slices."""
+    buf, n = [], 0
+    for batch in batches:
+        buf.append(batch)
+        n += batch.num_rows
+        while n >= rows_per_block:
+            tbl = pa.Table.from_batches(buf)
+            yield tbl.slice(0, rows_per_block)
+            rest = tbl.slice(rows_per_block)
+            buf, n = rest.to_batches(), rest.num_rows
+    if n:
+        yield pa.Table.from_batches(buf)
+
+
+def _batch_metrics(arr) -> dict:
     """Encode one batch's embedding column, decode it back, and compare
     the flattened float32 buffers vectorized."""
-    from parquet_converter_spark.codecs import decode_block, encode_block
+    blob = encode_block_arrow(arr, "f32list", None)
+    out, used = decode_block_arrow(blob)
 
-    blob = encode_block(s, "f32list", None)
-    out, used = decode_block(blob)
-
-    na_a = s.isna().to_numpy()
-    na_b = out.isna().to_numpy()
-    vals_a = [np.asarray(v, dtype=np.float32) for v in s[~na_a]]
-    vals_b = [np.asarray(v, dtype=np.float32) for v in out[~na_b]]
-    lens_a = np.fromiter((v.size for v in vals_a), np.int64, len(vals_a))
-    lens_b = np.fromiter((v.size for v in vals_b), np.int64, len(vals_b))
-    flat_a = np.concatenate(vals_a) if vals_a else np.empty(0, np.float32)
-    flat_b = np.concatenate(vals_b) if vals_b else np.empty(0, np.float32)
+    valid_a, (lens_a, flat_a) = _extract_arrow(arr, "f32list")
+    valid_b, (lens_b, flat_b) = _extract_arrow(out, "f32list")
     # compare BIT PATTERNS, not float values: array_equal treats NaN as
     # unequal (a NaN embedding would report a false roundtrip failure)
     # and -0.0 == +0.0 (a sign-flip corruption would falsely pass) —
     # the module contract is bit-identity on the float32 buffers
     ok = bool(
-        np.array_equal(na_a, na_b)
+        np.array_equal(valid_a, valid_b)
         and np.array_equal(lens_a, lens_b)
         and np.array_equal(flat_a.view(np.uint32), flat_b.view(np.uint32))
     )
     return {
-        "n_vecs": int(len(s)),
+        "n_vecs": len(arr),
         "codec": used,
         "raw_bytes": int(flat_a.nbytes),
-        "encoded_bytes": int(len(blob)),
+        "encoded_bytes": len(blob),
         "roundtrip_ok": ok,
     }
 
@@ -81,24 +96,15 @@ def per_batch_metrics(
     ~rows_per_block regardless of partition size."""
 
     def comp_stream(it):
-        buf = None
-        for pdf in it:
-            s = pdf[col]
-            buf = s if buf is None else pd.concat([buf, s], ignore_index=True)
-            while len(buf) >= rows_per_block:
-                yield pd.DataFrame(
-                    [_batch_metrics(buf.iloc[:rows_per_block].reset_index(drop=True))]
-                )
-                buf = buf.iloc[rows_per_block:].reset_index(drop=True)
-        if buf is not None and len(buf):
-            yield pd.DataFrame([_batch_metrics(buf.reset_index(drop=True))])
+        for blk in _rechunk(it, rows_per_block):
+            yield pa.RecordBatch.from_pylist([_batch_metrics(blk.column(0))], schema=_SCHEMA)
 
     def comp_per_batch(it):
-        for pdf in it:
-            yield pd.DataFrame([_batch_metrics(pdf[col])])
+        for batch in it:
+            yield pa.RecordBatch.from_pylist([_batch_metrics(batch.column(0))], schema=_SCHEMA)
 
     if id_col is None:
-        return df.select(col).mapInPandas(comp_per_batch, _SCHEMA)
+        return df.select(col).mapInArrow(comp_per_batch, from_arrow_schema(_SCHEMA))
     bucketed = (
         df.select(id_col, col)
         .withColumn("_g", F.pmod(F.xxhash64(id_col), F.lit(n_parts)))
@@ -106,38 +112,31 @@ def per_batch_metrics(
         .sortWithinPartitions(id_col)
         .select(col)
     )
-    return bucketed.mapInPandas(comp_stream, _SCHEMA)
+    return bucketed.mapInArrow(comp_stream, from_arrow_schema(_SCHEMA))
 
 
-_LOSSY_SCHEMA = (
-    "codec string, n_vecs long, raw_bytes long, encoded_bytes long, "
-    "max_abs_err double, max_rel_err double, sum_cos double, bound_ok boolean"
+_LOSSY_SCHEMA = pa.schema(
+    [("codec", pa.string()), ("n_vecs", pa.int64()), ("raw_bytes", pa.int64()),
+     ("encoded_bytes", pa.int64()), ("max_abs_err", pa.float64()),
+     ("max_rel_err", pa.float64()), ("sum_cos", pa.float64()), ("bound_ok", pa.bool_())]
 )
 
 
-def _lossy_batch_metrics(s: pd.Series, codec: str) -> dict:
+def _lossy_batch_metrics(arr, codec: str) -> dict:
     """Encode one batch with an explicit lossy codec, decode, and score
     the approximation: worst absolute / amax-relative element error,
     per-vector cosine fidelity, and whether the codec's published error
     bound held (fq8: ≤ amax/254 + float slop; fq16: ≤ 2^-11 · amax)."""
-    from parquet_converter_spark.codecs import decode_block, encode_block
-
-    blob = encode_block(s, "f32list", codec)
-    out, used = decode_block(blob)
+    blob = encode_block_arrow(arr, "f32list", codec)
+    out, used = decode_block_arrow(blob)
     assert used == codec
 
-    vals = s.dropna()
-    dec = out.dropna()
     # vectorized per-vector scoring: flatten once, segment-reduce with
     # reduceat over the length bounds (no per-vector Python loop)
-    arrs = [np.asarray(v, dtype=np.float32) for v in vals]
-    lens = np.fromiter((a.size for a in arrs), np.int64, len(arrs))
-    flat_a = (np.concatenate(arrs) if arrs else np.empty(0, np.float32)).astype(np.float64)
-    flat_b = (
-        np.concatenate([np.asarray(v, dtype=np.float32) for v in dec])
-        if len(dec)
-        else np.empty(0, np.float32)
-    ).astype(np.float64)
+    valid, (lens, flat_a) = _extract_arrow(arr, "f32list")
+    _, (_, flat_b) = _extract_arrow(out, "f32list")
+    flat_a = flat_a.astype(np.float64)
+    flat_b = flat_b.astype(np.float64)
     raw = int(flat_a.size * 4)
     nz = lens > 0
     starts = np.concatenate([[0], np.cumsum(lens)])[:-1][nz]
@@ -170,14 +169,14 @@ def _lossy_batch_metrics(s: pd.Series, codec: str) -> dict:
             # the realized error/cosine fields ARE the quality report
             bound_ok = None
         # empty and null vectors roundtrip exactly: count them at cos 1
-        sum_cos = float(cos.sum()) + float((~nz).sum()) + float(len(s) - len(vals))
+        sum_cos = float(cos.sum()) + float((~nz).sum()) + float((~valid).sum())
     else:
         max_abs = max_rel = 0.0
         bound_ok = True if codec in ("fq8", "fq16") else None
-        sum_cos = float(len(s))
+        sum_cos = float(len(arr))
     return {
         "codec": codec,
-        "n_vecs": int(len(s)),
+        "n_vecs": len(arr),
         "raw_bytes": int(raw),
         "encoded_bytes": int(len(blob)),
         "max_abs_err": max_abs,
@@ -201,30 +200,19 @@ def quantize_roundtrip(
     roundtripped frame to quantify the QUALITY cost of the space win,
     e.g. recall@10 of exact cosine search on fq8/fpq storage vs float32
     (reported by bench.py)."""
-    from parquet_converter_spark.codecs import decode_block, encode_block
     from parquet_converter_spark.codecs.vectors import LOSSY_VEC_CODECS
 
     if codec not in LOSSY_VEC_CODECS:
         raise ValueError(f"not a lossy vector codec: {codec!r} (have {sorted(LOSSY_VEC_CODECS)})")
-    schema = df.schema
-
-    def _roundtrip(pdf: pd.DataFrame) -> pd.DataFrame:
-        out, _ = decode_block(encode_block(pdf[col], "f32list", codec))
-        pdf = pdf.copy()
-        pdf[col] = list(out)
-        return pdf
 
     def comp(it):
-        buf = None
-        for pdf in it:
-            buf = pdf if buf is None else pd.concat([buf, pdf], ignore_index=True)
-            while len(buf) >= rows_per_block:
-                yield _roundtrip(buf.iloc[:rows_per_block].reset_index(drop=True))
-                buf = buf.iloc[rows_per_block:].reset_index(drop=True)
-        if buf is not None and len(buf):
-            yield _roundtrip(buf.reset_index(drop=True))
+        for blk in _rechunk(it, rows_per_block):
+            i = blk.schema.get_field_index(col)
+            out, _ = decode_block_arrow(encode_block_arrow(blk.column(i), "f32list", codec))
+            blk = blk.set_column(i, blk.field(i), out.cast(blk.field(i).type))
+            yield from blk.combine_chunks().to_batches()
 
-    return df.mapInPandas(comp, schema)
+    return df.mapInArrow(comp, df.schema)
 
 
 def lossy_compression_metrics(
@@ -252,19 +240,11 @@ def lossy_compression_metrics(
         raise ValueError(f"not lossy vector codecs: {bad} (have {sorted(LOSSY_VEC_CODECS)})")
 
     def comp(it):
-        buf = None
-        for pdf in it:
-            s = pdf[col]
-            buf = s if buf is None else pd.concat([buf, s], ignore_index=True)
-            while len(buf) >= rows_per_block:
-                blk = buf.iloc[:rows_per_block].reset_index(drop=True)
-                yield pd.DataFrame([_lossy_batch_metrics(blk, c) for c in codecs])
-                buf = buf.iloc[rows_per_block:].reset_index(drop=True)
-        if buf is not None and len(buf):
-            blk = buf.reset_index(drop=True)
-            yield pd.DataFrame([_lossy_batch_metrics(blk, c) for c in codecs])
+        for blk in _rechunk(it, rows_per_block):
+            rows = [_lossy_batch_metrics(blk.column(0), c) for c in codecs]
+            yield pa.RecordBatch.from_pylist(rows, schema=_LOSSY_SCHEMA)
 
-    per_batch = df.select(col).mapInPandas(comp, _LOSSY_SCHEMA)
+    per_batch = df.select(col).mapInArrow(comp, from_arrow_schema(_LOSSY_SCHEMA))
     return (
         per_batch.groupBy("codec")
         .agg(

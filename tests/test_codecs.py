@@ -1,18 +1,21 @@
 """Known-answer + property-style roundtrip tests for every codec
-(SURVEY.md §5 carry-over items 2 and 3). Spark-free — pure numpy."""
+(SURVEY.md §5 carry-over items 2 and 3). Spark-free — pure numpy and
+pyarrow, through the block entry points ``encode_block_arrow`` /
+``decode_block_arrow``."""
 
 from __future__ import annotations
 
+from datetime import datetime, timedelta
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from parquet_converter_spark.codecs import (
-    CODECS,
     ELIGIBLE,
     block_codec,
-    decode_block,
-    encode_block,
+    decode_block_arrow,
+    encode_block_arrow,
 )
 from parquet_converter_spark.codecs.primitives import (
     bitpack,
@@ -23,20 +26,37 @@ from parquet_converter_spark.codecs.primitives import (
 
 rng = np.random.default_rng(7)
 
+#: input Arrow type per block dtype; vectors come in as float64 lists
+#: (Spark array<double>) so the float32 narrowing is exercised too
+ARROW_IN = {
+    "str": pa.string(),
+    "int64": pa.int64(),
+    "int32": pa.int32(),
+    "ts_us": pa.timestamp("us"),
+    "f32list": pa.list_(pa.float64()),
+}
 
-def _roundtrip(series: pd.Series, dtype: str, codec: str | None):
-    blob = encode_block(series, dtype, codec)
-    out, used = decode_block(blob)
-    assert list(series.isna()) == list(out.isna()), (dtype, codec)
-    a = series[series.notna()]
-    b = out[out.notna()]
-    if dtype == "ts_us":
-        a = pd.to_datetime(a).astype("datetime64[us]")
-        b = pd.to_datetime(b).astype("datetime64[us]")
-        assert list(a) == list(b), (dtype, codec)
-    else:
-        assert list(a) == list(b), (dtype, codec)
+
+def encode(values, dtype: str, codec: str | None = None) -> bytes:
+    return encode_block_arrow(pa.array(values, ARROW_IN[dtype]), dtype, codec)
+
+
+def decode(blob: bytes) -> tuple[list, str]:
+    arr, used = decode_block_arrow(blob)
+    return arr.to_pylist(), used
+
+
+def _roundtrip(values, dtype: str, codec: str | None):
+    blob = encode(values, dtype, codec)
+    out, used = decode(blob)
+    expect = values.tolist() if isinstance(values, np.ndarray) else list(values)
+    assert out == expect, (dtype, codec)
     return blob, used
+
+
+def _f32(v) -> np.ndarray:
+    with np.errstate(over="ignore"):  # float64 → float32 overflow is ±inf by contract
+        return np.asarray(v, np.float32)
 
 
 # ---------------------------------------------------------------- primitives
@@ -64,34 +84,31 @@ def test_zigzag():
 
 def test_rle_known_answer():
     # 3 runs: aaa bb c → run codes + lengths
-    s = pd.Series(["a", "a", "a", "b", "b", "c"], dtype=object)
-    blob = encode_block(s, "str", "rle")
-    out, used = decode_block(blob)
+    blob = encode(["a", "a", "a", "b", "b", "c"], "str", "rle")
+    out, used = decode(blob)
     assert used == "rle"
-    assert out.tolist() == ["a", "a", "a", "b", "b", "c"]
+    assert out == ["a", "a", "a", "b", "b", "c"]
 
 
 def test_dict_known_answer():
-    s = pd.Series(["user", "assistant", "user", None, "user"], dtype=object)
-    blob = encode_block(s, "str", "dict")
-    out, _ = decode_block(blob)
-    assert out.tolist()[:3] == ["user", "assistant", "user"]
-    assert out.isna().tolist() == [False, False, False, True, False]
+    blob = encode(["user", "assistant", "user", None, "user"], "str", "dict")
+    out, _ = decode(blob)
+    assert out[:3] == ["user", "assistant", "user"]
+    assert [v is None for v in out] == [False, False, False, True, False]
 
 
 def test_delta_known_answer():
-    s = pd.Series(np.array([100, 101, 102, 103], dtype=np.int64))
-    blob = encode_block(s, "int64", "delta")
-    out, _ = decode_block(blob)
-    assert out.tolist() == [100, 101, 102, 103]
+    blob = encode(np.array([100, 101, 102, 103], dtype=np.int64), "int64", "delta")
+    out, _ = decode(blob)
+    assert out == [100, 101, 102, 103]
     # constant delta of 1 → tiny block
     assert len(blob) < 64
 
 
 def test_forbp_known_answer():
-    s = pd.Series(np.array([1_000_000, 1_000_003, 1_000_001], dtype=np.int64))
-    out, _ = decode_block(encode_block(s, "int64", "forbp"))
-    assert out.tolist() == [1_000_000, 1_000_003, 1_000_001]
+    vals = np.array([1_000_000, 1_000_003, 1_000_001], dtype=np.int64)
+    out, _ = decode(encode(vals, "int64", "forbp"))
+    assert out == [1_000_000, 1_000_003, 1_000_001]
 
 
 # --------------------------------------------------------------- properties
@@ -113,7 +130,7 @@ INT_CASES = {
 @pytest.mark.parametrize("case", list(INT_CASES))
 @pytest.mark.parametrize("codec", ELIGIBLE["int64"] + [None])
 def test_int_roundtrip(case, codec):
-    _roundtrip(pd.Series(INT_CASES[case]), "int64", codec)
+    _roundtrip(INT_CASES[case], "int64", codec)
 
 
 STR_CASES = {
@@ -134,39 +151,35 @@ STR_CASES = {
 @pytest.mark.parametrize("case", list(STR_CASES))
 @pytest.mark.parametrize("codec", ELIGIBLE["str"] + [None])
 def test_str_roundtrip(case, codec):
-    _roundtrip(pd.Series(STR_CASES[case], dtype=object), "str", codec)
+    _roundtrip(STR_CASES[case], "str", codec)
 
 
 @pytest.mark.parametrize("codec", ELIGIBLE["ts_us"] + [None])
 def test_ts_roundtrip(codec):
-    base = pd.Timestamp("2024-03-01 12:00:00")
-    ts = pd.Series(
-        [base + pd.Timedelta(microseconds=int(d)) for d in np.cumsum(rng.integers(1, 10**7, 500))]
-    )
-    ts.iloc[5] = pd.NaT
-    ts.iloc[499] = pd.NaT
+    base = datetime(2024, 3, 1, 12, 0, 0)
+    ts = [base + timedelta(microseconds=int(d)) for d in np.cumsum(rng.integers(1, 10**7, 500))]
+    ts[5] = None
+    ts[499] = None
     _roundtrip(ts, "ts_us", codec)
 
 
 def test_ts_microsecond_precision():
-    ts = pd.Series(pd.to_datetime(["2024-01-01 00:00:00.000001", "2024-01-01 00:00:00.999999"]))
-    out, _ = decode_block(encode_block(ts, "ts_us", "delta"))
-    assert out.astype("datetime64[us]").tolist() == ts.astype("datetime64[us]").tolist()
+    ts = [datetime(2024, 1, 1, 0, 0, 0, 1), datetime(2024, 1, 1, 0, 0, 0, 999999)]
+    out, _ = decode(encode(ts, "ts_us", "delta"))
+    assert out == ts
 
 
 @pytest.mark.parametrize("codec", ELIGIBLE["int32"] + [None])
 def test_int32_nullable_roundtrip(codec):
-    s = pd.Series(pd.array([1, None, 3, 3, 3, -2, None, 0] * 40, dtype="Int32"))
-    _roundtrip(s, "int32", codec)
+    _roundtrip([1, None, 3, 3, 3, -2, None, 0] * 40, "int32", codec)
 
 
 def test_auto_selects_reasonably():
     # sequential ints → delta; low-cardinality runs → rle or dict
-    seq = pd.Series(np.arange(10_000, dtype=np.int64))
-    blob = encode_block(seq, "int64", None)
+    blob = encode(np.arange(10_000, dtype=np.int64), "int64", None)
     assert block_codec(blob) == "delta"
-    roles = pd.Series((["user"] * 30 + ["assistant"] * 30) * 100, dtype=object)
-    blob = encode_block(roles, "str", None)
+    roles = (["user"] * 30 + ["assistant"] * 30) * 100
+    blob = encode(roles, "str", None)
     assert block_codec(blob) in ("rle", "dict")
 
 
@@ -178,23 +191,18 @@ def test_f32list_vector_roundtrip():
     ]
     vecs[3] = None
     vecs[4] = []
-    s = pd.Series(vecs, dtype=object)
     for codec in ["fplain", "ftrans", None]:
-        blob = encode_block(s, "f32list", codec)
-        out, used = decode_block(blob)
-        assert s.isna().tolist() == out.isna().tolist()
-        for a, b in zip(s.tolist(), out.tolist()):
+        out, used = decode(encode(vecs, "f32list", codec))
+        assert [v is None for v in vecs] == [v is None for v in out]
+        for a, b in zip(vecs, out):
             if a is not None:
-                assert np.array_equal(np.float32(a), np.float32(b))  # bit-identical
+                assert _f32(a).tobytes() == _f32(b).tobytes()  # bit-identical
 
 
 def test_compression_beats_plain_on_text():
     words = ["the", "quick", "brown", "fox", "query", "spark", "encode"]
-    texts = pd.Series(
-        [" ".join(rng.choice(words, rng.integers(5, 40))) for _ in range(3000)],
-        dtype=object,
-    )
-    auto = encode_block(texts, "str", None)
+    texts = [" ".join(rng.choice(words, rng.integers(5, 40))) for _ in range(3000)]
+    auto = encode(texts, "str", None)
     raw = sum(len(t.encode()) for t in texts)
     assert len(auto) < raw * 0.5
 
@@ -203,27 +211,20 @@ def test_f32list_special_values_bit_identical():
     """Embedding payloads carry NaN/Inf/-0.0/subnormals — the vector
     codec must reproduce the exact float32 bit patterns, plus None and
     empty vectors."""
-    import numpy as np
-    import pandas as pd
-
-    from parquet_converter_spark.codecs.blocks import decode_block, encode_block
-
-    s = pd.Series([
+    vecs = [
         [1.0, float("nan"), float("inf")],
         [-0.0, 3.5e38, -float("inf")],   # 3.5e38 overflows float32 → inf
         None,
         [],
         [1.401298464324817e-45],          # smallest positive subnormal
-    ])
-    out, used = decode_block(encode_block(s, "f32list", None))
-    for a, b in zip(s, out):
+    ]
+    out, used = decode(encode(vecs, "f32list", None))
+    assert _f32(vecs[1])[1] == np.inf
+    for a, b in zip(vecs, out):
         if a is None:
             assert b is None
             continue
-        with np.errstate(over="ignore"):  # 3.5e38→inf cast is the point
-            aa = np.asarray(a, np.float32)
-            bb = np.asarray(b, np.float32)
-        assert aa.tobytes() == bb.tobytes()
+        assert _f32(a).tobytes() == _f32(b).tobytes()
 
 
 # ------------------------------------------------------------- lossy vectors
@@ -238,9 +239,8 @@ def test_lossy_codecs_never_auto_selected():
     assert LOSSY_VEC_CODECS == {"fq16", "fq8", "fpq"}
     for dtype, names in ELIGIBLE.items():
         assert not (set(names) & LOSSY_VEC_CODECS), dtype
-    vecs = pd.Series([rng.standard_normal(8).astype(np.float32).tolist()
-                      for _ in range(64)], dtype=object)
-    _, used = decode_block(encode_block(vecs, "f32list", None))
+    vecs = [rng.standard_normal(8).astype(np.float32).tolist() for _ in range(64)]
+    _, used = decode(encode(vecs, "f32list", None))
     assert used in ("fplain", "ftrans")
 
 
@@ -254,11 +254,10 @@ def test_fq16_roundtrip_within_half_precision_bound():
     ]
     vals[5] = None
     vals[6] = []
-    s = pd.Series(vals, dtype=object)
-    out, used = decode_block(encode_block(s, "f32list", "fq16"))
+    out, used = decode(encode(vals, "f32list", "fq16"))
     assert used == "fq16"
-    assert s.isna().tolist() == out.isna().tolist()
-    for a, b in zip(s, out):
+    assert [v is None for v in vals] == [v is None for v in out]
+    for a, b in zip(vals, out):
         if a is None:
             continue
         a32 = np.asarray(a, np.float32)
@@ -280,12 +279,11 @@ def test_fq8_roundtrip_within_quantization_step():
     vals[0] = [0.0, 0.0, 0.0]        # amax == 0 → exact
     vals[1] = None
     vals[2] = []
-    s = pd.Series(vals, dtype=object)
-    out, used = decode_block(encode_block(s, "f32list", "fq8"))
+    out, used = decode(encode(vals, "f32list", "fq8"))
     assert used == "fq8"
-    assert s.isna().tolist() == out.isna().tolist()
+    assert [v is None for v in vals] == [v is None for v in out]
     assert np.asarray(out[0], np.float32).tolist() == [0.0, 0.0, 0.0]
-    for a, b in zip(s, out):
+    for a, b in zip(vals, out):
         if a is None or len(a) == 0:
             continue
         a64 = np.asarray(a, np.float32).astype(np.float64)
@@ -299,9 +297,8 @@ def test_fq8_nonfinite_vector_poisons_only_itself():
     """A NaN/inf amax must not corrupt neighboring vectors — scales are
     per-vector. The clean vector roundtrips within its own bound."""
     clean = np.asarray([1.0, -2.0, 0.5], np.float32)
-    s = pd.Series([[float("nan"), 1.0], clean.tolist(), [float("inf"), 3.0]],
-                  dtype=object)
-    out, _ = decode_block(encode_block(s, "f32list", "fq8"))
+    vecs = [[float("nan"), 1.0], clean.tolist(), [float("inf"), 3.0]]
+    out, _ = decode(encode(vecs, "f32list", "fq8"))
     got = np.asarray(out[1], np.float64)
     assert (np.abs(got - clean.astype(np.float64)) <= 2.0 / 254.0 * 1.01).all()
 
@@ -309,11 +306,10 @@ def test_fq8_nonfinite_vector_poisons_only_itself():
 def test_fq8_compresses_better_than_lossless():
     """The point of opting in: ~4x fewer payload bytes than fplain on
     incompressible float noise (fq16 ~2x)."""
-    vecs = pd.Series([rng.standard_normal(64).astype(np.float32).tolist()
-                      for _ in range(512)], dtype=object)
-    plain = len(encode_block(vecs, "f32list", "fplain"))
-    h16 = len(encode_block(vecs, "f32list", "fq16"))
-    q8 = len(encode_block(vecs, "f32list", "fq8"))
+    vecs = [rng.standard_normal(64).astype(np.float32).tolist() for _ in range(512)]
+    plain = len(encode(vecs, "f32list", "fplain"))
+    h16 = len(encode(vecs, "f32list", "fq16"))
+    q8 = len(encode(vecs, "f32list", "fq8"))
     assert h16 < plain * 0.60
     assert q8 < plain * 0.35
 
@@ -330,14 +326,13 @@ def test_fpq_roundtrip_quality_and_ratio_on_clustered_vectors():
     ]
     vals[3] = None
     vals[4] = []
-    s = pd.Series(vals, dtype=object)
-    blob = encode_block(s, "f32list", "fpq")
-    out, used = decode_block(blob)
+    blob = encode(vals, "f32list", "fpq")
+    out, used = decode(blob)
     assert used == "fpq"
-    assert s.isna().tolist() == out.isna().tolist()
+    assert [v is None for v in vals] == [v is None for v in out]
     assert len(out[4]) == 0
     coss = []
-    for a, b in zip(s, out):
+    for a, b in zip(vals, out):
         if a is None or len(a) == 0:
             continue
         a64 = np.asarray(a, np.float64)
@@ -346,19 +341,15 @@ def test_fpq_roundtrip_quality_and_ratio_on_clustered_vectors():
         coss.append(a64 @ b64 / (np.linalg.norm(a64) * np.linalg.norm(b64)))
     assert float(np.mean(coss)) > 0.99
     assert float(np.min(coss)) > 0.95
-    q8 = len(encode_block(s, "f32list", "fq8"))
+    q8 = len(encode(vals, "f32list", "fq8"))
     assert len(blob) < q8 * 0.45  # PQ lands well past int8's ~4x
-    assert blob == encode_block(s, "f32list", "fpq")  # deterministic
+    assert blob == encode(vals, "f32list", "fpq")  # deterministic
 
 
 def test_fpq_rejects_ragged_and_handles_empty_blocks():
     with pytest.raises(ValueError, match="fixed-dimension"):
-        encode_block(
-            pd.Series([[1.0, 2.0], [1.0, 2.0, 3.0]], dtype=object), "f32list", "fpq"
-        )
+        encode([[1.0, 2.0], [1.0, 2.0, 3.0]], "f32list", "fpq")
     # a block of only null/empty vectors still roundtrips
-    s = pd.Series([None, [], None], dtype=object)
-    out, used = decode_block(encode_block(s, "f32list", "fpq"))
+    out, used = decode(encode([None, [], None], "f32list", "fpq"))
     assert used == "fpq"
-    assert out.isna().tolist() == [True, False, True]
-    assert len(out[1]) == 0
+    assert out == [None, [], None]

@@ -97,26 +97,6 @@ def test_zone_map_time_slice_prunes_blocks(spark, transcripts, tmp_path_factory)
     assert got_conv.count() == want_conv.count() > 0
 
 
-def test_zone_maps_identical_on_both_udf_paths(spark, transcripts, tmp_path_factory):
-    """Arrow and pandas encode paths must write the same zone maps."""
-    base = tmp_path_factory.mktemp("zmp")
-    stats = {}
-    for label, arrow in (("arrow", True), ("pandas", False)):
-        io = ParquetDirTableIO(spark, str(base / label))
-        encode_table(
-            spark, transcripts, io, run_id="r", salt_rows=512,
-            num_buckets=4, arrow_native=arrow,
-        )
-        rows = (
-            ckpt.committed_blocks(io)
-            .select("bucket", "salt", "chunk", "ts_min", "ts_max", "conv_min", "conv_max")
-            .orderBy("bucket", "salt", "chunk")
-            .collect()
-        )
-        stats[label] = [tuple(r) for r in rows]
-    assert stats["arrow"] == stats["pandas"]
-
-
 def test_encoded_size_beats_reference_footprint(spark, transcripts, tmp_path_factory):
     base = tmp_path_factory.mktemp("size")
     io = ParquetDirTableIO(spark, str(base / "enc"))
@@ -196,22 +176,6 @@ def test_selective_decode_by_bucket(spark, transcripts, tmp_path_factory):
     expect = keyed.where(F.col("bucket") == 3).count()
     got = decode_table(spark, io, buckets=[3]).count()
     assert got == expect
-
-
-def test_pandas_and_arrow_paths_agree(spark, transcripts, tmp_path_factory):
-    """The pandas grouped-map/map paths are the reference
-    implementation; both engine paths must produce interchangeable
-    blocks and identical decodes."""
-    base = tmp_path_factory.mktemp("paths")
-    io_a = ParquetDirTableIO(spark, str(base / "arrow"))
-    io_p = ParquetDirTableIO(spark, str(base / "pandas"))
-    encode_table(spark, transcripts, io_a, run_id="r", salt_rows=2048, num_buckets=4, arrow_native=True)
-    encode_table(spark, transcripts, io_p, run_id="r", salt_rows=2048, num_buckets=4, arrow_native=False)
-    # cross-decode: arrow-written blocks through the pandas decoder
-    dec_cross = decode_table(spark, io_a, arrow_native=False)
-    assert verify_decode_digest(dec_cross, transcripts)["ok"]  # scan-cost mode
-    dec_p = decode_table(spark, io_p, arrow_native=True)
-    assert verify_decode_digest(dec_p, transcripts)["ok"]
 
 
 def test_column_projected_decode(spark, transcripts, tmp_path_factory):
@@ -310,10 +274,6 @@ def test_decode_error_isolation_and_corrupt_scan(spark, transcripts, tmp_path):
     decoded = decode_table(spark, io, on_error="skip")
     assert decoded.count() == transcripts.count() - n_lost
     assert decoded.where(F.col("conv_id").isNull()).count() == 0
-
-    # both UDF paths agree
-    decoded_p = decode_table(spark, io, on_error="skip", arrow_native=False)
-    assert decoded_p.count() == transcripts.count() - n_lost
 
     # diagnostic scan names the exact block and column
     bad = corrupt_blocks(spark, io).collect()

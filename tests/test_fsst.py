@@ -1,15 +1,18 @@
 """FSST-specific tests: table build, escape disambiguation, roundtrip
-on adversarial byte patterns (SURVEY.md §7.3 #1)."""
+on adversarial byte patterns (SURVEY.md §7.3 #1). Roundtrips run the
+production kernel (``compress_vectorized``) and compare it with the
+C-regex reference compressor in ``fsst_oracle``."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
+from fsst_oracle import compress as oracle_compress
 from parquet_converter_spark.codecs.fsst import (
     ESCAPE,
     build_symbol_table,
-    compress,
+    compress_vectorized,
     decompress,
 )
 
@@ -18,14 +21,18 @@ rng = np.random.default_rng(11)
 
 def _rt(data: bytes, symbols=None):
     syms = build_symbol_table(data) if symbols is None else symbols
-    comp = compress(data, syms)
-    out = decompress(comp, syms)
-    assert out == data
+    comp = compress_vectorized(data, syms)
+    assert decompress(comp, syms) == data
+    ref = oracle_compress(data, syms)
+    assert decompress(ref, syms) == data
+    # one candidate per 2-byte prefix may cost a little density
+    assert len(comp) <= max(len(ref) + 8, int(len(ref) * 1.1))
     return comp, syms
 
 
 def test_empty():
-    assert compress(b"", []) == b""
+    assert compress_vectorized(b"", []) == b""
+    assert oracle_compress(b"", []) == b""
     assert decompress(b"", []) == b""
 
 
@@ -37,7 +44,8 @@ def test_simple_text():
 
 def test_no_symbols_all_escape():
     data = b"abcdef"
-    comp = compress(data, [])
+    comp = compress_vectorized(data, [])
+    assert comp == oracle_compress(data, [])
     assert len(comp) == 2 * len(data)
     assert decompress(comp, []) == data
 
@@ -60,8 +68,9 @@ def test_longest_match_priority():
     # "abcd" and "ab" both symbols → compressor must prefer "abcd"
     syms = [b"abcd", b"ab", b"c", b"d", b"x"]
     data = b"abcdabcdxx"
-    comp = compress(data, syms)
+    comp = compress_vectorized(data, syms)
     assert comp[0] == 0 and comp[1] == 0  # two "abcd" codes first
+    assert comp == oracle_compress(data, syms)
     assert decompress(comp, syms) == data
 
 
@@ -69,8 +78,7 @@ def test_consecutive_escapes():
     # literals that are the escape byte, adjacent → run disambiguation
     syms = [b"A"]
     data = bytes([ESCAPE] * 7) + b"A" + bytes([ESCAPE])
-    comp = compress(data, syms)
-    assert decompress(comp, syms) == data
+    _rt(data, syms)
 
 
 def test_unicode_text():
@@ -86,9 +94,6 @@ def test_random_bytes_roundtrip(size):
 
 
 # ------------------------------------------------- vectorized kernel parity
-
-
-from parquet_converter_spark.codecs.fsst import compress_vectorized  # noqa: E402
 
 
 @pytest.mark.parametrize(
@@ -111,7 +116,7 @@ def test_vectorized_kernel_roundtrip(data):
 def test_vectorized_kernel_matches_regex_ratio():
     data = b"select a from t where b = c order by d " * 2000
     syms = build_symbol_table(data)
-    c_re = compress(data, syms)
+    c_re = oracle_compress(data, syms)
     c_np = compress_vectorized(data, syms)
     assert decompress(c_np, syms) == data
     # exact-greedy tokenization → identical (or better) ratio

@@ -158,29 +158,26 @@ def test_media_features_sha256_known_answer(spark):
 def test_codec_selector_known_answers():
     """The cost-model selector's picks on canonical shapes are fixed
     (deterministic sample, deterministic sizes) — pin them."""
-    import pandas as pd
+    import pyarrow as pa
 
-    from parquet_converter_spark.codecs.blocks import decode_block, encode_block
+    from parquet_converter_spark.codecs.arrow_blocks import decode_block_arrow, encode_block_arrow
 
     cases = {
-        "const_int": (pd.Series([7] * 1000), "int64", "forbp", 40),
-        "seq_int": (pd.Series(range(1000)), "int64", "delta", 50),
+        "const_int": (pa.array([7] * 1000), "int64", "forbp", 40),
+        "seq_int": (pa.array(range(1000)), "int64", "delta", 50),
         "rand_str": (
-            pd.Series([f"user_{i * 7919 % 997}" for i in range(1000)]),
+            pa.array([f"user_{i * 7919 % 997}" for i in range(1000)]),
             "str",
             "plain",
             2000,
         ),
     }
-    for name, (s, dtype, want_codec, max_bytes) in cases.items():
-        blob = encode_block(s, dtype, None)
-        out, used = decode_block(blob)
+    for name, (arr, dtype, want_codec, max_bytes) in cases.items():
+        blob = encode_block_arrow(arr, dtype, None)
+        out, used = decode_block_arrow(blob)
         assert used == want_codec, name
         assert len(blob) <= max_bytes, name
-        if dtype == "int64":
-            assert out.astype("int64").tolist() == s.tolist(), name
-        else:
-            assert out.tolist() == s.tolist(), name
+        assert out.to_pylist() == arr.to_pylist(), name
 
 
 def test_ivf_ann_known_answer(spark):

@@ -10,8 +10,13 @@ from datetime import datetime
 
 import pytest
 
-from parquet_converter_spark.localframe import local_df
-from parquet_converter_spark.schema import MANIFEST_SCHEMA
+from parquet_converter_spark.localframe import empty_df, local_df
+from parquet_converter_spark.schema import (
+    BLOCKS_STORED_SCHEMA,
+    MANIFEST_SCHEMA,
+    METRICS_SCHEMA,
+    TABLE_META_SCHEMA,
+)
 
 
 def _same(a, b):
@@ -60,3 +65,17 @@ def test_local_df_keeps_schema_and_stays_local(spark):
     assert local_df(spark, [], MANIFEST_SCHEMA).count() == 0
     with pytest.raises(ValueError, match="arity"):
         local_df(spark, [("r~1", 1)], MANIFEST_SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [MANIFEST_SCHEMA, BLOCKS_STORED_SCHEMA, METRICS_SCHEMA, TABLE_META_SCHEMA],
+    ids=["manifest", "blocks", "metrics", "table_meta"],
+)
+def test_empty_df_keeps_exact_schema(spark, schema):
+    """Non-nullable fields stay non-nullable: an empty frame must union
+    and compare like a read of the table it stands in for."""
+    df = empty_df(spark, schema)
+    assert df.schema == schema
+    assert df.count() == 0
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()

@@ -236,6 +236,26 @@ def test_embedding_compression_bit_identity_nan_negzero(spark):
     assert not math.isnan(out["raw_bytes"])
 
 
+def test_lossy_embedding_paths_keep_nan(spark):
+    """A NaN element decodes to NaN, never to NULL: quantize_roundtrip
+    hands readers exactly the decoded floats, and the lossy report's
+    max_abs_err turns NaN instead of dropping the block it came from."""
+    import math
+
+    from parquet_converter_spark.operators import embcodec
+
+    rows = [(0, [float("nan"), -0.0, 1.0, 2.0]), (1, [0.5, -1.0, 3.0, 4.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = {
+        r["vec_id"]: r["embedding"]
+        for r in embcodec.quantize_roundtrip(df, "fq16").collect()
+    }
+    assert math.isnan(got[0][0]) and got[0][1:] == [-0.0, 1.0, 2.0]
+    assert got[1] == [0.5, -1.0, 3.0, 4.0]
+    row = embcodec.lossy_compression_metrics(df, codecs=("fq16",)).collect()[0]
+    assert math.isnan(row["max_abs_err"])
+
+
 def test_analyzer_sample_rows(spark):
     df = spark.createDataFrame(
         [(i, f"name{i}") for i in range(50)], "id int, name string"

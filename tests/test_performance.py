@@ -239,23 +239,20 @@ def test_choose_codec_overhead_floor():
     actually encoding it."""
     import time
 
-    import numpy as np
+    import pyarrow as pa
 
-    from parquet_converter_spark.codecs.blocks import encode_block
+    from parquet_converter_spark.codecs.arrow_blocks import _extract_arrow, encode_block_arrow
     from parquet_converter_spark.codecs.blocks import choose_codec
-    from parquet_converter_spark.codecs.strutil import strings_to_buf
-    import pandas as pd
 
-    rng = np.random.default_rng(1)
     frags = [f"turn text body {i % 211} with shared structure" for i in range(64_000)]
-    s = pd.Series(frags)
-    canonical = strings_to_buf(s)
+    arr = pa.array(frags)
+    _, canonical = _extract_arrow(arr, "str")
 
     t0 = time.perf_counter()
     codec = choose_codec(canonical, "str")
     t_sel = time.perf_counter() - t0
     t0 = time.perf_counter()
-    encode_block(s, "str", codec)
+    encode_block_arrow(arr, "str", codec)
     t_enc = time.perf_counter() - t0
     # bound generous for VM noise: selection ≤ max(encode, 60ms floor)
     assert t_sel <= max(t_enc, 0.06), (t_sel, t_enc, codec)
@@ -268,6 +265,7 @@ def test_fsst_vectorized_kernel_within_regex_budget():
 
     import numpy as np
 
+    from fsst_oracle import compress as oracle_compress
     from parquet_converter_spark.codecs import fsst
 
     rng = np.random.default_rng(0)
@@ -278,7 +276,7 @@ def test_fsst_vectorized_kernel_within_regex_budget():
     best_re, best_vec = 1e9, 1e9
     for _ in range(2):  # interleaved best-of-2 (VM noise)
         t0 = time.perf_counter()
-        out_re = fsst.compress(data, syms)
+        out_re = oracle_compress(data, syms)
         best_re = min(best_re, time.perf_counter() - t0)
         t0 = time.perf_counter()
         out_vec = fsst.compress_vectorized(data, syms)
